@@ -3,10 +3,11 @@
 North rule: "per-partition checkpoint commits to Iceberg with lineage +
 extraction-metrics side tables so any failed partition range is resumable".
 The sandbox has no Iceberg catalog jars, so the commit unit here is a
-dynamic partition overwrite of the pending bucket partitions + an atomic
-lineage marker per bucket — the same idempotence contract as an Iceberg
-`overwritePartitions()`; swap `_write_pending` for
-`writeTo(table).overwritePartitions()` on a real catalog.
+dynamic partition overwrite of the pending bucket partitions + ONE atomic
+lineage marker per run — the same idempotence contract as an Iceberg
+`overwritePartitions()`, which also commits every partition it writes at
+once; swap the data write for `writeTo(table).overwritePartitions()` on a
+real catalog.
 
 ONE scan of the input per call: all pending buckets are selected with a
 single `bucket IN (...)` filter and written in one job via
@@ -16,12 +17,15 @@ full 100 TB documents table once per bucket.
 
 Resume semantics (exactly-once):
   1. pending bucket partitions are written (dynamic overwrite -> idempotent
-     on retry)
-  2. ONLY THEN the lineage marker for (job_id, bucket) is committed
-     (atomic rename)
-  3. resume skips buckets whose lineage marker exists; a crash between 1
-     and 2 rewrites those buckets — the overwrite makes the rewrite
-     invisible.
+     on retry); they succeed or fail together as one job
+  2. ONLY THEN the run's lineage marker
+     `_lineage/<job_id>_run_<unique id>.parquet`, one row per bucket the
+     run wrote, is committed (copy to `.tmp` + rename); its existence
+     commits every bucket in it
+  3. resume lists `_lineage/` once, reads the committed `*.parquet`
+     markers and skips the buckets they hold for this `job_id`; a crash
+     between 1 and 2 rewrites the run's buckets — the overwrite makes the
+     rewrite invisible.
 
 Lineage markers are written THROUGH the Hadoop FileSystem of `out_dir`
 (local file://, hdfs://, s3a://, ...) so they always live next to the
@@ -38,6 +42,7 @@ from __future__ import annotations
 import os
 import tempfile
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,6 +58,18 @@ LINEAGE_COLS = [
     "wall_sec",
     "committed_at",
 ]
+"""Columns of the lineage side table, one row per committed bucket.
+`wall_sec` is the run's wall split evenly over the buckets it committed
+and `committed_at` the run's single commit time: a run writes all its
+buckets in one job, so it measures no per-bucket wall."""
+
+# Spark types of LINEAGE_COLS as the markers' pyarrow write stores them
+# (Python int -> int64, float -> double); given to the reader, so it
+# infers nothing from the markers' footers
+_LINEAGE_DDL = (
+    "job_id string, bucket bigint, n_docs bigint, n_spans bigint, "
+    "n_media_missing bigint, wall_sec double, committed_at double"
+)
 
 
 def _bucket_col(n_buckets: int):
@@ -67,52 +84,65 @@ def _fs(spark: SparkSession, path_str: str):
     return fs, path
 
 
-def _lineage_path(out_dir: str, job_id: str, bucket: int) -> str:
-    return f"{out_dir.rstrip('/')}/_lineage/{job_id}_bucket_{bucket:05d}.parquet"
+def _lineage_dir(out_dir: str) -> str:
+    return f"{out_dir.rstrip('/')}/_lineage"
+
+
+def _committed_markers(spark: SparkSession, out_dir: str) -> list[str]:
+    """The committed lineage markers: the `*.parquet` files of ONE listing
+    of `_lineage/`.  A `.tmp` left by a crash between a marker's copy and
+    its rename is never listed, so it commits nothing."""
+    fs, root = _fs(spark, _lineage_dir(out_dir))
+    if not fs.exists(root):
+        return []
+    return sorted(
+        st.getPath().toString()
+        for st in fs.listStatus(root)
+        if st.isFile() and st.getPath().getName().endswith(".parquet")
+    )
 
 
 def completed_buckets(
     spark: SparkSession, out_dir: str, job_id: str, n_buckets: int
 ) -> set[int]:
-    fs, root = _fs(spark, f"{out_dir.rstrip('/')}/_lineage")
-    if not fs.exists(root):
+    paths = _committed_markers(spark, out_dir)
+    if not paths:
         return set()
-    done = set()
-    for b in range(n_buckets):
-        _, p = _fs(spark, _lineage_path(out_dir, job_id, b))
-        if fs.exists(p):
-            done.add(b)
-    return done
+    rows = (
+        spark.read.schema(_LINEAGE_DDL)
+        .parquet(*paths)
+        .filter((F.col("job_id") == job_id) & F.col("bucket").between(0, n_buckets - 1))
+        .select("bucket")
+        .collect()
+    )
+    return {int(r["bucket"]) for r in rows}
 
 
-def _commit_lineage(spark: SparkSession, out_dir: str, job_id: str, row: dict) -> None:
-    """Marker commit: local one-row parquet -> copy next to the data via
-    the Hadoop FS -> rename into place (marker existence IS the commit
-    flag, so it must appear whole or not at all).
+def _commit_lineage(spark: SparkSession, out_dir: str, job_id: str, rows: list[dict]) -> None:
+    """Marker commit for a whole run: local parquet of `rows` -> copy next
+    to the data via the Hadoop FS as `.tmp` -> rename into place (marker
+    existence IS the commit flag of every bucket in it, so it must appear
+    whole or not at all).  The name is unique per run, so nothing is
+    overwritten and no delete precedes the rename.
 
     The rename is atomic on HDFS/local; on S3A it is copy+delete (not
     atomic) — marker semantics tolerate that (a torn marker is absent or
-    whole-file, and resume re-writes the bucket idempotently), but the
+    whole-file, and resume re-writes the buckets idempotently), but the
     rename's boolean RETURN must still be checked: Hadoop FileSystem
     reports failure by returning false, not by throwing."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    final = _lineage_path(out_dir, job_id, int(row["bucket"]))
+    final = f"{_lineage_dir(out_dir)}/{job_id}_run_{uuid.uuid4().hex}.parquet"
     fs, final_p = _fs(spark, final)
-    fs.mkdirs(final_p.getParent())
+    jvm = spark._jvm
+    tmp_p = jvm.org.apache.hadoop.fs.Path(final + ".tmp")
     with tempfile.TemporaryDirectory() as td:
         local = os.path.join(td, "marker.parquet")
-        pq.write_table(pa.Table.from_pylist([row]), local)
-        jvm = spark._jvm
-        tmp_p = jvm.org.apache.hadoop.fs.Path(final + ".tmp")
+        pq.write_table(pa.Table.from_pylist(rows), local)
         fs.copyFromLocalFile(False, True, jvm.org.apache.hadoop.fs.Path(local), tmp_p)
-        if fs.exists(final_p):
-            fs.delete(final_p, False)
-        if not fs.rename(tmp_p, final_p):
-            raise IOError(
-                f"lineage marker rename failed (bucket NOT committed): {final}"
-            )
+    if not fs.rename(tmp_p, final_p):
+        raise IOError(f"lineage marker rename failed (run NOT committed): {final}")
 
 
 def pending_extraction(
@@ -187,23 +217,25 @@ def run_with_checkpoints(
     )
     by_bucket = {int(r["bucket"]): r for r in stats}
 
-    committed: list[int] = []
     per_bucket_wall = wall / len(pending)
+    committed_at = time.time()
+    rows = []
     for bucket in pending:
         r = by_bucket.get(bucket)
-        row = {
-            "job_id": job_id,
-            "bucket": bucket,
-            "n_docs": int(r["n_docs"]) if r else 0,
-            "n_spans": int(r["n_spans"]) if r else 0,
-            "n_media_missing": int(r["n_media_missing"]) if r else 0,
-            "wall_sec": float(per_bucket_wall),
-            "committed_at": float(time.time()),
-        }
-        # lineage marker LAST: its existence == the bucket is committed
-        _commit_lineage(spark, out_dir, job_id, row)
-        committed.append(bucket)
-    return committed
+        rows.append(
+            {
+                "job_id": job_id,
+                "bucket": bucket,
+                "n_docs": int(r["n_docs"]) if r else 0,
+                "n_spans": int(r["n_spans"]) if r else 0,
+                "n_media_missing": int(r["n_media_missing"]) if r else 0,
+                "wall_sec": float(per_bucket_wall),
+                "committed_at": committed_at,
+            }
+        )
+    # lineage marker LAST: its existence == the run's buckets are committed
+    _commit_lineage(spark, out_dir, job_id, rows)
+    return pending
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -211,7 +243,8 @@ def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir.rstrip('/')}/_lineage")
+    """Rows of every committed lineage marker (empty when there is none)."""
+    return spark.read.schema(_LINEAGE_DDL).parquet(*_committed_markers(spark, out_dir))
 
 
 def extraction_metrics(spark: SparkSession, out_dir: str) -> DataFrame:

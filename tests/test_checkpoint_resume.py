@@ -3,6 +3,8 @@ byte-identical output, no duplicate commits."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from ms_ocr_spark.plans import checkpoint as cp
@@ -44,6 +46,136 @@ def test_checkpoint_resume_exactly_once(spark, corpus_dir, tmp_path):
     assert met["n_docs"] == golden.count()
     assert met["n_spans"] == golden.select(F.sum(F.size("spans"))).collect()[0][0]
     assert met["n_media_missing"] == 0
+
+
+def _lineage_files(out: str) -> list[str]:
+    return sorted(f for f in os.listdir(f"{out}/_lineage") if not f.startswith("."))
+
+
+def _assert_metrics_match_output(spark, out: str, n_buckets: int) -> None:
+    """The metrics side table sums to the committed output's counts."""
+    met = cp.extraction_metrics(spark, out).collect()[0]
+    expect = (
+        cp.read_output(spark, out)
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum(F.size("spans")).alias("n_spans"))
+        .collect()[0]
+    )
+    assert (met["n_buckets"], met["n_docs"], met["n_spans"]) == (
+        n_buckets,
+        expect["n_docs"],
+        expect["n_spans"],
+    )
+
+
+def test_one_lineage_marker_per_run(spark, corpus_dir, tmp_path):
+    """A run commits ONE marker holding a row per bucket; a crash and a
+    resume leave one marker per run, with disjoint bucket sets."""
+    import pyarrow.parquet as pq
+
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    media = spark.read.parquet(f"{corpus_dir}/media_store.parquet")
+
+    full = str(tmp_path / "full")
+    assert cp.run_with_checkpoints(
+        spark, docs, media, full, job_id="j", n_buckets=64
+    ) == list(range(64))
+    assert len(_lineage_files(full)) == 1
+    assert cp.read_lineage(spark, full).count() == 64
+    assert cp.completed_buckets(spark, full, "j", 64) == set(range(64))
+
+    out = str(tmp_path / "resumed")
+    first = cp.run_with_checkpoints(
+        spark, docs, media, out, job_id="j", n_buckets=64, max_buckets=3
+    )
+    second = cp.run_with_checkpoints(spark, docs, media, out, job_id="j", n_buckets=64)
+    files = _lineage_files(out)
+    assert len(files) == 2
+    per_file = [
+        set(pq.read_table(f"{out}/_lineage/{f}", columns=["bucket"]).column(0).to_pylist())
+        for f in files
+    ]
+    assert per_file[0].isdisjoint(per_file[1])
+    assert sorted(per_file, key=len) == [set(first), set(second)]
+    assert per_file[0] | per_file[1] == set(range(64))
+
+
+def test_lineage_readers_ignore_uncommitted_tmp(spark, corpus_dir, tmp_path):
+    """A `.tmp` marker left by a crash between copy and rename commits
+    nothing: resume and the metrics side table read committed markers only."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    media = spark.read.parquet(f"{corpus_dir}/media_store.parquet")
+    out = str(tmp_path / "out")
+    first = cp.run_with_checkpoints(
+        spark, docs, media, out, job_id="j", n_buckets=8, max_buckets=3
+    )
+    marker = _lineage_files(out)[0]
+    lineage = tmp_path / "out" / "_lineage"
+    # a whole copy that never got renamed, claiming the other buckets ...
+    committed = pq.read_table(str(lineage / marker)).to_pylist()
+    rows = [{**committed[0], "bucket": b} for b in range(3, 8)]
+    pq.write_table(pa.Table.from_pylist(rows), str(lineage / "j_run_whole.parquet.tmp"))
+    # ... and a torn one
+    data = (lineage / marker).read_bytes()
+    (lineage / "j_run_torn.parquet.tmp").write_bytes(data[: len(data) // 2])
+
+    assert cp.completed_buckets(spark, out, "j", 8) == set(first)
+    _assert_metrics_match_output(spark, out, 3)
+
+    second = cp.run_with_checkpoints(spark, docs, media, out, job_id="j", n_buckets=8)
+    assert sorted(first + second) == list(range(8))
+    _assert_metrics_match_output(spark, out, 8)
+
+
+def test_resume_keyed_on_job_id_and_reads_per_bucket_markers(spark, corpus_dir, tmp_path):
+    """Resume keys on the exact `job_id` (j1 never sees j10's buckets) and
+    still honours markers of the older one-file-per-bucket layout
+    (`<job_id>_bucket_NNNNN.parquet`, same columns)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = spark.read.parquet(f"{corpus_dir}/documents.parquet")
+    media = spark.read.parquet(f"{corpus_dir}/media_store.parquet")
+    out = str(tmp_path / "out")
+
+    assert cp.run_with_checkpoints(
+        spark, docs, media, out, job_id="j10", n_buckets=4
+    ) == [0, 1, 2, 3]
+    assert cp.completed_buckets(spark, out, "j1", 4) == set()
+
+    # rewrite j1's first run marker in the per-bucket layout
+    first = cp.run_with_checkpoints(
+        spark, docs, media, out, job_id="j1", n_buckets=4, max_buckets=2
+    )
+    markers = [f"{out}/_lineage/{f}" for f in _lineage_files(out) if f.startswith("j1_")]
+    table = pa.concat_tables(pq.read_table(m) for m in markers)
+    for m in markers:
+        os.remove(m)
+    for row in table.to_pylist():
+        pq.write_table(
+            table.from_pylist([row], schema=table.schema),
+            f"{out}/_lineage/j1_bucket_{row['bucket']:05d}.parquet",
+        )
+    assert cp.completed_buckets(spark, out, "j1", 4) == set(first)
+    assert cp.completed_buckets(spark, out, "j10", 4) == {0, 1, 2, 3}
+
+    def data_mtimes(buckets):
+        return {
+            f: os.stat(f"{out}/data/bucket={b}/{f}").st_mtime_ns
+            for b in buckets
+            for f in os.listdir(f"{out}/data/bucket={b}")
+        }
+
+    before = data_mtimes(first)
+    second = cp.run_with_checkpoints(spark, docs, media, out, job_id="j1", n_buckets=4)
+    assert sorted(first + second) == [0, 1, 2, 3]
+    assert data_mtimes(first) == before  # legacy-committed buckets not rewritten
+    assert cp.completed_buckets(spark, out, "j1", 4) == {0, 1, 2, 3}
+    met = {r["job_id"]: r for r in cp.extraction_metrics(spark, out).collect()}
+    assert met["j1"]["n_buckets"] == 4 and met["j10"]["n_buckets"] == 4
+    assert met["j1"]["n_docs"] == met["j10"]["n_docs"] == cp.read_output(spark, out).count()
 
 
 def test_checkpoint_single_input_scan(spark, corpus_dir):
@@ -168,7 +300,7 @@ def test_expire_old_sweeps_stale_buckets(spark, corpus_dir, tmp_path):
         datetime.datetime.now(datetime.timezone.utc) + datetime.timedelta(hours=1)
     ).strftime("%Y-%m-%dT%H:%M:%S")
     deleted = expire_old(spark, out, future)  # everything predates +1h
-    assert len(deleted) == 8  # 4 bucket dirs + 4 lineage markers
+    assert len(deleted) == 5  # 4 bucket dirs + 1 run lineage marker
     assert cp.completed_buckets(spark, out, "t", 4) == set()
 
 
